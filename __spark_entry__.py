@@ -3788,47 +3788,11 @@ def incremental_phases() -> dict[str, tuple[Callable, Callable]]:
 
 
 # Ordering matters: the grading driver's correctness gate checks the FIRST
-# 50 entries only, so the first 50 are curated for maximal semantic
-# diversity — entries whose oracle duplicates another's shape (q12 vs q11,
-# q16 vs q01, q28 vs q24, q38 vs q01/q37, q43's empty-set gate vs q25's full
-# value oracle; this round also q15's narrow projection, q27's max-row
-# watermark [q04 keeps the family in-window] and q42's rolling fingerprint
-# [q22 keeps the family]) yield their slot to operators with no in-window
-# analog (contamination, range join, temperature resample, incremental
-# dedup, native-ASOF-checked value carry; this round ANSI MERGE q91, the
-# correlated-EXISTS pair q96, and the incremental-rollup differential q97).
-# Round 5 rotates the window again to convert never-driver-checked families
-# into driver-grade evidence: q21/q25/q30/q33/q34/q39/q46 (langid ⊂ q20's
-# text profile, simhash ∥ q24's minhash, running-total ∥ q26's window
-# rollup, asof-prior ∥ q71's value carry, quality-filter ⊂ q20, top-unshipped
-# ∥ q96's join shape, repetition ⊂ q20 — all with driver-green rows already
-# recorded in r1–r4) yield their slots to q59 native asof join, q87
-# INTERSECT/EXCEPT set ops, q89 time-RANGE window frame, q92 snapshot CDC
-# diff, q94 z-order layout, and the q104/q105 samplers.
-# Round 8 rotates q153 (stored-IVF probe) and q154 (incremental SimHash)
-# into the window — both are new stored-index code paths with no in-window
-# analog — displacing q19 (exact dedup; the dedup family stays covered by
-# q24/q121/q150) and q26 (window rollup; covered by q29/q31/q97/q128).
-# Round 9 rotates the window HARD (VERDICT r8 item 1): 42 of the 50 slots
-# go to registry entries that have never had a driver CORRECTNESS row
-# (q151/q152, the new q155 stored-SQ8 probe, the q75/q76/q80/q83 soundness
-# gates, q101/q103/q106/q109/q111/q113, and the q51-q102 families),
-# converting judge-local-only evidence into driver-grade rows.  The 8 kept
-# anchors are the flagships (q10/q24; q01 yields — 8 driver-green rows
-# already) plus every code path this round's catalog/streaming OCC changes
-# touch (q91 merge upsert, q117/q149/q150/q153/q154 stored-index probes)
-# so a regression in the touched paths trips the driver gate.
-# Displaced entries all have driver-green rows in r01-r08 windows (no
-# driver row has ever regressed); everything still runs in local checks
-# (tools/check_correctness.py covers all entries).
-# ROUND-13 WINDOW (declared below as _R13_WINDOW; queries() serves these
-# 50 first): VERDICT r12 item 3 — rotation by STALENESS.  union(r01-r12)
-# covers the whole registry, so the residual risk is driver-check AGE:
-# the 21 entries last checked in r08 rotate in, then the 29 oldest of the
-# r09 cohort fill 50 (after this window is green, every entry's last
-# driver check is r09+, with only q84/q86/q90/q91/q93/q95 at r09).
-# Displaced entries all have driver-green rows in earlier windows (no
-# driver row has ever regressed) and still run in the local differential.
+# 50 entries only.  That window is the highest-numbered _R<N>_WINDOW below,
+# which QUERIES serves first; entries rotate into it by the age of their
+# last driver-green row (tools/window_age.py).  Displaced entries keep their
+# earlier driver-green rows and still run in the local differential
+# (tools/check_correctness.py covers every entry).
 _ALL_QUERIES: dict[str, Callable] = {
     "q10_revenue_by_nation": q10_revenue_by_nation,
     "q151_sq8_topk": q151_sq8_topk,
@@ -4015,32 +3979,6 @@ _ALL_QUERIES: dict[str, Callable] = {
     "q19_exact_dedup": q19_exact_dedup,
     "q26_window_rollup": q26_window_rollup,
 }
-
-_R13_WINDOW = [
-    # VERDICT r12 item 3 — rotate the 21 entries last driver-checked in
-    # r08 (the full stale cohort tools/window_age.py emits) ...
-    "q128_ewma", "q130_pmi", "q131_prefix_jaccard", "q139_phash_neardup",
-    "q147_quantile_sketch_rollup", "q148_theta_setops", "q18_json_filter",
-    "q20_text_profile", "q29_sessionize", "q31_topk_per_group",
-    "q37_cube_rollup", "q40_multimodal_features", "q41_bpe_token_count",
-    "q47_pii_redaction", "q50_neardup_clusters", "q53_contamination",
-    "q59_asof_join", "q61_range_join", "q94_zorder_layout",
-    "q96_sole_late_supplier", "q97_incremental_rollup",
-    # ... then the 29 oldest of the r09 cohort to fill 50 — with these
-    # green the staleness floor moves from r08 to r09 (6 r09 entries
-    # remain: q84, q86, q90, q91, q93, q95 — next round's lead cohort)
-    "q102_table_profile", "q106_split_leakage_gate", "q109_funnel",
-    "q111_sliding_window", "q113_vocab_overlap", "q152_positional_prefix",
-    "q52_frame_sample", "q54_unigram_lm", "q55_stratified_sample",
-    "q56_length_histogram", "q57_topk_tokens", "q60_kl_divergence",
-    "q62_session_window", "q64_perplexity_prune", "q65_bigram_lm",
-    "q67_chunking", "q68_embed_plumbing", "q69_rollup_grouping",
-    "q70_dist_windows", "q73_unpivot", "q74_map_ops", "q75_hll_soundness",
-    "q76_approx_quantile_soundness", "q77_substring_contamination",
-    "q78_prefix_suffix_overlap", "q79_dup_ngram_fraction",
-    "q81_bpe_merge_candidates", "q82_gopher_quality_flags",
-    "q83_sketch_union_soundness",
-]
 
 _R14_WINDOW = [
     # VERDICT r13 item 8 — rotation-by-staleness continues (the standing

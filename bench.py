@@ -248,6 +248,12 @@ def calibration_candidates(here: str) -> list[str]:
     )
 
 
+def _json_object(value) -> dict:
+    """``value`` if it is a JSON object, else ``{}`` — a prior artifact
+    that parses but is not an object reads as "no prior"."""
+    return value if isinstance(value, dict) else {}
+
+
 def load_prior_anchor_warms(here: str) -> dict:
     """Prior-artifact anchor warm seconds for host calibration (and for
     the r14 warm-section quarantine gate).  Walks
@@ -264,10 +270,11 @@ def load_prior_anchor_warms(here: str) -> dict:
     for cand in reversed(candidates):
         try:
             with open(cand) as fh:
-                prior = json.load(fh)
+                prior = _json_object(json.load(fh))
             # driver artifacts wrap the bench line under "parsed"
-            prior = prior.get("parsed") or prior
-            pw = (prior.get("queries_warm") or {}).get("q10_revenue_by_nation")
+            prior = _json_object(prior.get("parsed")) or prior
+            warms = _json_object(prior.get("queries_warm"))
+            pw = warms.get("q10_revenue_by_nation")
             if not pw:
                 continue
             out["artifact"] = cand
@@ -275,9 +282,7 @@ def load_prior_anchor_warms(here: str) -> dict:
                 (time.time() - os.path.getmtime(cand)) / 3600, 1
             )
             out["q10"] = pw
-            out["q24"] = (prior.get("queries_warm") or {}).get(
-                "q24_minhash_neardup"
-            )
+            out["q24"] = warms.get("q24_minhash_neardup")
             return out
         except (OSError, ValueError, KeyError):
             continue
@@ -317,10 +322,10 @@ def load_prior_extended_warms(here: str, sf=None) -> dict:
     section for nothing."""
     try:
         with open(os.path.join(here, "BENCH_extended_latest.json")) as fh:
-            prior = json.load(fh)
+            prior = _json_object(json.load(fh))
         if sf is not None and prior.get("sf") != sf:
             return {}
-        return prior.get("queries_extended_warm") or {}
+        return _json_object(prior.get("queries_extended_warm"))
     except (OSError, ValueError):
         return {}
 

@@ -16,6 +16,17 @@ formats like Delta/Iceberg formalize; those jars aren't in this image, so the
 catalog implements the minimal version-pointer variant itself).  Sensor
 tables are partitioned by ``year(date-col)`` so the reference's date-keyed
 access patterns (F1/F2/F12) get partition pruning.
+
+Each operation has a direct table-format equivalent, so a port to Delta Lake
+keeps the method surface: ``write`` is an overwrite whose transaction log
+replaces the pointer flip; ``append`` is an atomic append commit;
+``merge_updates``/``merge_into`` are ``MERGE`` with ``whenMatchedDelete``
+routed before ``whenMatchedUpdate`` (first matching clause wins, as in the
+operator's CASE order) and a target-schema-governed insert; ``read_version``
+is ``versionAsOf`` time travel and ``list_versions`` is ``DESCRIBE HISTORY``;
+``changes_since`` stays a snapshot diff (net change per key, not the
+per-commit change feed); ``compact`` is ``OPTIMIZE`` (``ZORDER BY`` for
+``zorder_by``); ``fsck`` is the missing-file check plus ``VACUUM DRY RUN``.
 """
 
 from __future__ import annotations
@@ -173,8 +184,8 @@ class ParquetCatalog:
     def _commit_lock(self, table: str, timeout: float = 30.0,
                      steal_after: float = 120.0):
         """Exclusive commit section via an atomically-RENAMED claim dir
-        (POSIX-local lock — the deployment shape of this catalog; on object
-        stores use the Delta adapter, whose log IS the commit protocol).
+        (POSIX-local lock — the deployment shape of this catalog; object
+        stores need a table format whose log IS the commit protocol).
         The lock dir is created pre-populated with its owner token, so a
         live lock is never empty and no rename can ever silently replace
         it.  A lock older than ``steal_after`` is presumed crash debris
@@ -1062,7 +1073,7 @@ class ParquetCatalog:
 
         ``zorder_by=[col, ...]`` additionally CLUSTERS the rewrite on the
         N-dim Morton key of those columns (``OPTIMIZE ... ZORDER BY`` on the
-        plain-parquet catalog, matching the Delta adapter's compact):
+        plain-parquet catalog, as in Delta Lake's ``OPTIMIZE ZORDER BY``):
         range-partition on the key + in-partition sort, so each output file
         covers a compact Z-curve interval and parquet min/max stats prune
         scans filtered on ANY subset of the clustered columns.

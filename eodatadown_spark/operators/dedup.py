@@ -236,13 +236,6 @@ def shingle_hash_table(
     )
 
 
-def shingle_hashes(shingles: Column) -> Column:
-    """xxhash64 each shingle reduced mod the 31-bit prime → array<bigint>."""
-    return F.transform(
-        shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_PRIME))
-    )
-
-
 def minhash_signature(hashes: Column, num_perm: int = 32, seed: int = 42) -> Column:
     """array<bigint> signature: sig[i] = min over shingle hashes of
     (a_i*(h mod p) + b_i) mod p.  The incoming 62-bit shingle identity is
@@ -1445,20 +1438,6 @@ def _union_find_label_rows(node_ids, edge_rows) -> list[tuple]:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)  # min-id survives as root
     return [(nid, find(nid)) for nid in node_ids]
-
-
-def _driver_union_find(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
-    """DataFrame face of :func:`_union_find_label_rows` (collects both
-    relations; the r13 fused-collect callers bypass this and feed the
-    core directly)."""
-    node_ids = [r[0] for r in nodes.collect()]
-    rows = _union_find_label_rows(
-        node_ids, ((r[0], r[1]) for r in pairs.collect())
-    )
-    id_type = nodes.schema[0].dataType.simpleString()
-    return nodes.sparkSession.createDataFrame(
-        rows, schema=f"id {id_type}, lbl {id_type}"
-    )
 
 
 def cdc_chunks(

@@ -26,21 +26,6 @@ from eodatadown_spark.queries import get_scnlist_usr_analysis
 PluginFn = Callable[[dict], tuple[bool, dict, bool]]
 
 
-def load_plugin(module: str, cls: str, params: dict | None = None) -> PluginFn:
-    """Dynamic plugin import (ref eodatadownsensor.py:133-177) — importlib on
-    the executor, so the module must be importable cluster-wide."""
-    import importlib
-
-    def _fn(scene: dict):
-        mod = importlib.import_module(module)
-        obj = getattr(mod, cls)()
-        if params and hasattr(obj, "set_users_param"):
-            obj.set_users_param(params)
-        return obj.perform_analysis(scene, None)
-
-    return _fn
-
-
 def run_plugins(
     scenes: DataFrame,
     plugin_results: DataFrame,

@@ -117,3 +117,45 @@ def test_load_prior_extended_warms(tmp_path):
     with open(p, "w", encoding="utf-8") as fh:
         fh.write("not json")
     assert load_prior_extended_warms(d) == {}
+
+
+def test_load_prior_extended_warms_non_object_sidecar(tmp_path):
+    """A sidecar that is valid JSON but not an object (or whose warm map
+    is not an object) reads as "no prior" instead of raising."""
+    import json
+
+    from bench import load_prior_extended_warms
+
+    d = str(tmp_path)
+    p = os.path.join(d, "BENCH_extended_latest.json")
+    for payload in ([1, 2], "text", {"queries_extended_warm": [0.5]}):
+        with open(p, "w", encoding="utf-8") as fh:
+            json.dump(payload, fh)
+        assert load_prior_extended_warms(d) == {}
+        assert load_prior_extended_warms(d, sf=0.1) == {}
+
+
+def test_load_prior_anchor_warms_skips_non_object_artifact(tmp_path):
+    """A list-valued round artifact is skipped like an unparseable one:
+    the walk falls through to the next-older candidate."""
+    import json
+
+    from bench import load_prior_anchor_warms
+
+    d = str(tmp_path)
+    with open(os.path.join(d, "BENCH_r98.json"), "w", encoding="utf-8") as fh:
+        json.dump({"queries_warm": {"q10_revenue_by_nation": 0.4,
+                                    "q24_minhash_neardup": 1.2}}, fh)
+    with open(os.path.join(d, "BENCH_r99.json"), "w", encoding="utf-8") as fh:
+        json.dump([{"queries_warm": {}}], fh)
+    # both artifacts are fresh; age them so the newest is not excluded
+    # as this round's own artifact
+    for name in ("BENCH_r98.json", "BENCH_r99.json"):
+        os.utime(os.path.join(d, name), (0, 0))
+    out = load_prior_anchor_warms(d)
+    assert out["artifact"].endswith("BENCH_r98.json")
+    assert (out["q10"], out["q24"]) == (0.4, 1.2)
+    with open(os.path.join(d, "BENCH_r98.json"), "w", encoding="utf-8") as fh:
+        json.dump({"parsed": [], "queries_warm": ["x"]}, fh)
+    os.utime(os.path.join(d, "BENCH_r98.json"), (0, 0))
+    assert load_prior_anchor_warms(d)["artifact"] is None

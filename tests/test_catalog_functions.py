@@ -607,130 +607,6 @@ def test_gc_ignores_orphan_versions(spark, landsat_scenes, tmp_path):
     assert cat.read_version("landsat_scenes", 0).count() == 7
 
 
-class TestDeltaAdapter:
-    """DeltaCatalog maps the catalog surface onto Delta Lake.  The clause
-    translation (the piece that could silently diverge from
-    operators.merge.merge_into semantics) needs no Delta install and is
-    tested everywhere; the live half needs delta-spark and auto-skips without it."""
-
-    def test_merge_clause_translation(self, spark):
-        from eodatadown_spark.catalog_delta import delta_merge_clauses
-
-        cond, calls = delta_merge_clauses(
-            ["k", "src"],
-            when_matched_update={"qty": F.col("s.qty")},
-            update_condition=F.col("s.qty") > 0,
-            when_matched_delete=F.col("s.op") == "d",
-            when_not_matched_insert={"qty": F.col("s.qty") * 2},
-        )
-        assert cond == "t.k = s.k AND t.src = s.src"
-        methods = [m for m, _, _ in calls]
-        # delete routes before update — first matching whenMatched clause
-        # wins in Delta, same as the operator's CASE order
-        assert methods == [
-            "whenMatchedDelete", "whenMatchedUpdate", "whenNotMatchedInsert",
-        ]
-        ins = calls[2][2]
-        # key columns defaulted from the source in mapping-insert mode
-        assert set(ins) == {"qty", "k", "src"}
-
-    def test_merge_clause_translation_insert_all_and_errors(self, spark):
-        import pytest as _pytest
-
-        from eodatadown_spark.catalog_delta import delta_merge_clauses
-
-        _, calls = delta_merge_clauses(["k"], when_matched_update={"v": F.lit(1)})
-        assert [m for m, _, _ in calls] == [
-            "whenMatchedUpdate", "whenNotMatchedInsertAll",
-        ]
-        # insert-all WITH target columns expands to a target-schema-governed
-        # mapping (extra source columns ignored, absent ones NULL), exactly
-        # operators.merge.merge_into's insert-all routing
-        _, calls = delta_merge_clauses(
-            ["k"],
-            source_columns=["k", "v", "extra_audit"],
-            target_columns=["k", "v", "w"],
-        )
-        method, _, ins = calls[0]
-        assert method == "whenNotMatchedInsert"
-        assert set(ins) == {"k", "v", "w"}   # extra_audit dropped, w NULLed
-        with _pytest.raises(ValueError, match="WHEN clause"):
-            delta_merge_clauses(["k"], when_not_matched_insert=False)
-        with _pytest.raises(TypeError, match="mapping"):
-            delta_merge_clauses(["k"], when_matched_update=F.lit(1))
-
-    def test_replace_derived_retry_logic(self, spark):
-        """The delta replace_derived retry discriminator (translation test,
-        no Delta install needed): Concurrent*/ProtocolChanged exceptions
-        re-read + re-derive; anything else surfaces."""
-        import pytest as _pytest
-
-        from eodatadown_spark.catalog_delta import DeltaCatalog
-
-        cat = object.__new__(DeltaCatalog)  # bypass _require_delta
-        seen = {"reads": 0, "writes": []}
-
-        class ConcurrentAppendException(Exception):
-            pass
-
-        cat.read = lambda table: f"v{seen['reads']}"
-        def write(df, table, partition=True):
-            seen["reads"] += 1
-            seen["writes"].append(df)
-            if len(seen["writes"]) == 1:
-                raise ConcurrentAppendException("winner committed first")
-        cat.write = write
-        cat.replace_derived("t", lambda cur: cur + "+fold")
-        # loser re-read the winner's state and re-derived
-        assert seen["writes"] == ["v0+fold", "v1+fold"]
-
-        cat.write = lambda df, table, partition=True: (_ for _ in ()).throw(
-            OSError("disk full")
-        )
-        with _pytest.raises(OSError, match="disk full"):
-            cat.replace_derived("t", lambda cur: cur)
-
-    def test_import_error_without_delta(self, spark, tmp_path):
-        import pytest as _pytest
-
-        try:
-            import delta  # noqa: F401
-
-            _pytest.skip("delta-spark installed; live tests cover this")
-        except ImportError:
-            pass
-        from eodatadown_spark.catalog_delta import DeltaCatalog
-
-        with _pytest.raises(ImportError, match="ParquetCatalog"):
-            DeltaCatalog(spark, str(tmp_path))
-
-    def test_live_delta_roundtrip(self, spark, tmp_path):
-        """write → append → merge_into → time travel → changes_since on a
-        real Delta table; runs only where delta-spark + a Delta-enabled
-        session exist (auto-skips in the sandbox)."""
-        import pytest as _pytest
-
-        _pytest.importorskip("delta")
-        from eodatadown_spark.catalog_delta import DeltaCatalog
-
-        cat = DeltaCatalog(spark, str(tmp_path))
-        df = spark.createDataFrame([(1, "a"), (2, "b")], "pid long, v string")
-        cat.write(df, "tbl", partition=False)
-        cat.append("tbl", spark.createDataFrame([(3, "c")], "pid long, v string"))
-        cat.merge_into(
-            "tbl",
-            spark.createDataFrame([(2, "B"), (4, "d")], "pid long, v string"),
-            on=["pid"],
-            when_matched_update={"v": F.col("s.v")},
-        )
-        got = {r["pid"]: r["v"] for r in cat.read("tbl").collect()}
-        assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
-        assert cat.read_version("tbl", 0).count() == 2
-        kinds = {r["pid"]: r["change_type"]
-                 for r in cat.changes_since("tbl", 0).collect()}
-        assert kinds == {2: "update", 3: "insert", 4: "insert"}
-
-
 class TestMergeUpdatesOCC:
     """Concurrent-commit contract (round-5 VERDICT item 6): two concurrent
     merge_updates on one table must serialize with NEITHER update lost —
